@@ -31,6 +31,9 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // warm-up runs are untimed, but a failure there must still show
+    def warmFailed(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] warm-up $name FAILED: ${e.getMessage}")
     // Warm the session once (Hadoop FS init, parquet footer reads, codegen/
     // janino warmup) so fixed JVM startup cost isn't attributed to whichever
     // query happens to run first.
@@ -39,7 +42,7 @@ object Bench {
       try {
         if (t == "events") Tables.events(spark, sfDir).count()
         else Tables.table(spark, sfDir, t).count()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => warmFailed(t, e) }
     }
     // Codegen/executor warmup: one representative query per major operator
     // family, untimed, at the smallest SF (generated code depends on the
@@ -146,7 +149,7 @@ object Bench {
       .filter(SparkEntry.queries.contains)
       .foreach { n =>
         try SparkEntry.queries(n)(spark, warmSf).count()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => warmFailed(n, e) }
       }
     spark.catalog.clearCache()
     // One untimed steady-state pass of the heavy family AT BENCH SCALE:
@@ -161,7 +164,7 @@ object Bench {
     if (warmSf != sfDir)
       heavyWarm.filter(SparkEntry.queries.contains).foreach { n =>
         try SparkEntry.queries(n)(spark, sfDir).count()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => warmFailed(n, e) }
       }
     spark.catalog.clearCache()
     System.gc() // settle warmup debris before anything is timed
@@ -314,11 +317,6 @@ object Bench {
           .withWatermark("ts", "30 minutes").as[StreamingJobs.SessionInput]
         val jobs: Seq[(String, String, () => org.apache.spark.sql.DataFrame)] = Seq(
           ("sessionize", "append", () => StreamingJobs.sessionize(sess).toDF),
-          // sessionizeTimers sets its OWN watermark — feed it the bare
-          // stream (redefining the watermark is an error in Spark 4)
-          ("sessionize_timers", "append", () => StreamingJobs.sessionizeTimers(
-            src.select(col("user_id"), col("ts"), col("value"))
-              .as[StreamingJobs.SessionInput]).toDF),
           ("counters", "update", () => StreamingJobs.runningCounters(
             src.select(col("user_id"), col("ts"), col("value"))
               .as[StreamingJobs.SessionInput]).toDF),

@@ -437,17 +437,18 @@ object PipelineQueries extends QueryModule {
       GROUP BY 1 ORDER BY 1
     """))
 
-  /** The curation DECISION chain, factored so the batch query and the
-    * streaming pipeline ([[graft.streaming.StreamingJobs.curationPipelineSink]])
-    * share ONE definition of every stage — gate (tok ≥ 20) → exact dedup
+  /** The curation DECISION chain — gate (tok ≥ 20) → exact dedup
     * (sha256 keep-first by doc_id) → weak-key near-dup removal
     * (lang + first-3-token prefix keep-first) → deterministic 80/10/10
     * hash split → fixed-boundary packing per (split, source). Returns the
     * per-doc keep-list with its decisions: (doc_id, lang, source, tok,
-    * text_hash, prefix_key, split, shard). The streaming twin reproduces
-    * the same keep-list incrementally (batch-local windows + history
-    * anti-joins + carried pack offsets); ScaleSmokeSpec proves row-for-row
-    * equality on doc_id-sliced replay.
+    * text_hash, prefix_key, split, shard). The streaming pipeline
+    * ([[graft.streaming.StreamingJobs.curationPipelineSink]]) reproduces
+    * the same keep-list incrementally: each keep-first window becomes
+    * first-arrival state per text_hash and per (lang, prefix_key) in
+    * transformWithState/RocksDB, and the pack offsets carry across
+    * batches; ScaleSmokeSpec proves row-for-row equality on
+    * doc_id-sliced replay.
     */
   def curationKeepList(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -542,11 +543,11 @@ object PipelineQueries extends QueryModule {
     * bucket-greedy production knob (bucket collision ⇒ presumed
     * near-dup; no pair verification step), and deliberately defined
     * over stage ENTRANTS rather than survivors, because that is the
-    * rule that decomposes exactly into batch-local window + anti-join
-    * against prior batches' bucket keys — the decomposition the
-    * streaming twin ([[graft.streaming.StreamingJobs
-    * .curationPipelineSink]] with nearDup="lsh") is proven row-for-row
-    * against. The verified candidate→cluster→canonical path stays
+    * rule that decomposes exactly into first-arrival state per band
+    * bucket: the streaming twin ([[graft.streaming.StreamingJobs
+    * .curationPipelineSink]] with nearDup="lsh") keeps each bucket's
+    * first entrant in RocksDB and is proven row-for-row against this
+    * chain. The verified candidate→cluster→canonical path stays
     * available as the batch q_dedup_canonical. Scale shape: band keys
     * are per-doc (corpus-linear), the window partitions by
     * (band, band_key) — high-cardinality buckets, never all-pairs.

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Structured Streaming replacements for the reference's Lambda pipeline
@@ -159,7 +159,7 @@ object StreamingJobs {
 
   /** transformWithState requires the RocksDB state-store provider
     * (NOTES fact #12); ONE definition so a provider/conf change cannot
-    * miss one of the five stateful jobs.
+    * miss one of the stateful jobs that call it.
     */
   private def requireRocksDb(spark: SparkSession): Unit =
     spark.conf.set(
@@ -172,68 +172,15 @@ object StreamingJobs {
   case class SessionState(start: Long, last: Long, n: Int, sum: Double)
   case class SessionOut(user_id: Long, n_events: Int, sum_value: Double, duration_sec: Long)
 
-  /** Emits a SessionOut when a user goes quiet for `gapMinutes` (event-time
-    * timeout). This is what the reference could NOT do in stateless Lambda
-    * without an external DynamoDB state machine.
-    */
-  def sessionize(events: Dataset[SessionInput], gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[SessionInput], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(user, s.n, s.sum, (s.last - s.start) / 1000))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { r =>
-              val t = r.ts.getTime
-              cur match {
-                case Some(s) if t - s.last < gapMs =>
-                  // an out-of-order (but above-watermark) event must not
-                  // rewind the session bounds
-                  cur = Some(s.copy(start = math.min(s.start, t),
-                    last = math.max(s.last, t), n = s.n + 1, sum = s.sum + r.value))
-                case Some(s) =>
-                  closed += SessionOut(user, s.n, s.sum, (s.last - s.start) / 1000)
-                  cur = Some(SessionState(t, t, 1, r.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, r.value))
-              }
-            }
-            cur.foreach { s =>
-              // a late batch can leave (last + gap) at or below the current
-              // watermark — setTimeoutTimestamp would throw and kill the
-              // query; such a session is already expired, close it inline
-              val wm = state.getCurrentWatermarkMs()
-              if (s.last + gapMs <= wm) {
-                closed += SessionOut(user, s.n, s.sum, (s.last - s.start) / 1000)
-                state.remove()
-              } else {
-                state.update(s)
-                state.setTimeoutTimestamp(s.last + gapMs)
-              }
-            }
-            closed.result().iterator
-          }
-      }
-  }
-
-  // ---- H6 (Spark 4 API): transformWithState sessionizer with TIMERS ----
-
-  /** The [[sessionize]] semantics on the modern transformWithState API,
-    * with event-time TIMERS doing the gap detection: each batch registers
-    * a timer at `last + gap`, and the session closes in
-    * [[SessionTimerProcessor.handleExpiredTimer]] when the watermark
-    * passes it. Stale timers (the session was extended after they were
-    * registered) are detected by comparing the expiry to the CURRENT
-    * deadline in state and ignored — cheaper at scale than a
+  /** Emits a SessionOut when a user goes quiet for `gapMinutes` of event
+    * time. This is what the reference could NOT do in stateless Lambda
+    * without an external DynamoDB state machine. Event-time TIMERS do the
+    * gap detection: each batch registers a timer at `last + gap`, and the
+    * session closes in [[SessionTimerProcessor.handleExpiredTimer]] when
+    * the watermark passes it; a gap inside the batch's own rows closes
+    * the session inline. Stale timers (the session was extended after
+    * they were registered) are detected by comparing the expiry to the
+    * CURRENT deadline in state and ignored — cheaper at scale than a
     * delete-and-reregister round-trip against the timer store per batch,
     * and the no-op expiry costs one state read.
     */
@@ -273,8 +220,8 @@ object StreamingJobs {
       cur.foreach { s =>
         state.update(s)
         // registering a timer at-or-below the watermark is fine with this
-        // API (it fires on the next eligibility check) — no inline-close
-        // workaround needed, unlike GroupState.setTimeoutTimestamp
+        // API (it fires on the next eligibility check), so an already
+        // expired session needs no inline close
         getHandle.registerTimer(s.last + gapMs)
       }
       closed.result().iterator
@@ -291,14 +238,14 @@ object StreamingJobs {
     }
   }
 
-  /** H6: timer-based sessionization stream (the transformWithState twin of
-    * [[sessionize]]; StreamingSpec proves the two emit identical sessions).
+  /** H6: event-time sessionization on transformWithState/RocksDB. The
+    * caller sets the watermark on `ts` (event-time timers need one); rows
+    * behind it are dropped before they reach the processor.
     */
-  def sessionizeTimers(events: Dataset[SessionInput], gapMinutes: Int = 30): Dataset[SessionOut] = {
+  def sessionize(events: Dataset[SessionInput], gapMinutes: Int = 30): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     requireRocksDb(events.sparkSession)
     events
-      .withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
       .transformWithState(new SessionTimerProcessor(gapMinutes * 60000L),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
@@ -342,8 +289,8 @@ object StreamingJobs {
     */
   class RunningCounterProcessor extends CounterLogic
 
-  /** H6 via the Spark 4 transformWithState API (the modern replacement for
-    * flatMapGroupsWithState; state is store-backed, schema'd, TTL-capable).
+  /** H6 via the Spark 4 transformWithState API (state is store-backed,
+    * schema'd, TTL-capable).
     */
   def runningCounters(events: Dataset[SessionInput]): Dataset[UserTotal] = {
     import events.sparkSession.implicits._
@@ -1486,133 +1433,19 @@ object StreamingJobs {
       }
   }
 
-  /** A8/I8/H8: the streaming quality-gate scrub — "scrub before anything
-    * else sees the text", as a routing map over the raw document stream.
-    * Each micro-batch goes through the SAME gate expressions as the
-    * batch queries ([[graft.operators.CurationQueries]].gopherSignals /
-    * piiScrub are shared definitions, so the stream's keep/reject
-    * verdicts cannot drift from the batch report): accepted docs are
-    * archived with PII already redacted; rejects route to the
-    * dead-letter path carrying every failed-rule flag plus a compact
-    * reason list for triage. Both destinations are written inside ONE
-    * foreachBatch from one persisted scan of the batch (the fan-out
-    * shape), and each batch lands in its own `batch=<id>` directory with
-    * overwrite semantics — a micro-batch replayed after a crash between
-    * write and checkpoint commit overwrites its own partial output
-    * instead of duplicating it, the same idempotence contract as
-    * [[upsertSink]] without the merge machinery. Stateless row-local
-    * gates ⇒ no state store, no watermark; throughput scales with
-    * partition count.
-    */
-  /** Compacted cross-batch history set for [[curationPipelineSink]] —
-    * an append-only keyed set stored as parquet with the
-    * [[upsertSink]] immutable-generation discipline (resolution by
-    * `_SUCCESS` completeness rather than a pointer file: `read(B)`
-    * must resolve generation ids < B, which a newest-wins pointer
-    * cannot express), all filesystem access through the Hadoop FS API
-    * (works on HDFS/S3, not just a driver-local disk).
-    *
-    * Layout under `root/`: `gen-<b>/` compacted snapshots (complete =
-    * `_SUCCESS`), `delta/batch=<i>/` per-batch
-    * contributions since the last snapshot. Every `compactEvery`-th
-    * batch folds snapshot + deltas + its own contribution into a new
-    * generation and prunes; between compactions a batch appends one
-    * delta. Per-batch READ volume is therefore bounded by
-    * 1 + (compactEvery − 1) directories at any stream age — the r12
-    * design read `batch=0..B−1`, O(B) dirs per batch and O(B²) over a
-    * stream's life. The trade is explicit: compaction rewrites the
-    * full history every compactEvery batches (amortized
-    * O(history/compactEvery) bytes written per batch — standard
-    * parquet-table compaction cost, tunable by the cadence) in
-    * exchange for bounded read fan-in; a history bigger than periodic
-    * rewrites tolerate belongs in transformWithState/RocksDB, whose
-    * LSM pays the same compaction cost incrementally.
-    *
-    * Replay safety (exactly-once): `read(B)` only ever resolves
-    * generations with id < B plus deltas with id < B, so a batch
-    * replayed after its own compaction committed re-reads exactly the
-    * pre-B state (the previous generation survives pruning, and a
-    * compaction at B only deletes deltas the previous generation
-    * already covers); every write is an idempotent whole-dir overwrite.
-    */
-  private[graft] class HistorySet(spark: SparkSession, root: String, compactEvery: Int = 8) {
-    private val fs = fsFor(spark, root)
-    private def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    private def complete(gen: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(p(gen), "_SUCCESS"))
-    // a stray non-numeric dir under the root (a tool-created scratch
-    // dir, a manually-renamed generation) must be SKIPPED, not parsed:
-    // an unguarded .toLong here throws inside foreachBatch and kills
-    // the stream over a directory the protocol never wrote
-    private def numericSuffix(name: String, prefix: String): Option[Long] = {
-      val s = name.stripPrefix(prefix)
-      // digit check + toLongOption: the latter alone would accept signs,
-      // the former alone would still throw on an all-digit suffix past
-      // Long.MaxValue (a 20-digit dir name must be skipped, not fatal)
-      if (name.startsWith(prefix) && s.nonEmpty && s.forall(_.isDigit))
-        s.toLongOption
-      else None
-    }
-    private def genIds(): Seq[Long] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(root))
-        .map(_.getPath.getName).toSeq
-        .flatMap(n => numericSuffix(n, "gen-").filter(_ => complete(n)))
+  // ---- I12 + H6: the streaming curation pipeline ----
 
-    /** (history through batch `batchId`−1, number of dirs read). */
-    def read(batchId: Long): (Option[DataFrame], Int) = {
-      val gen = genIds().filter(_ < batchId).sorted.lastOption
-      val deltas = (gen.map(_ + 1).getOrElse(0L) until batchId)
-        .map(i => s"delta/batch=$i").filter(d => fs.exists(p(d)))
-      val dirs = gen.map(g => s"$root/gen-$g").toSeq ++ deltas.map(d => s"$root/$d")
-      (if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*)), dirs.size)
-    }
-
-    /** Record this batch's contribution; compact on the cadence.
-      * Returns the rows rewritten by a compaction (the size of the new
-      * generation, read back from the written footers — a metadata-only
-      * count, no second pass over the union), or −1 for a plain delta
-      * batch — so the sink can surface the write-side amortization in
-      * `metrics/batch=<id>` next to the read-side dir counts.
-      */
-    def write(batchId: Long, contribution: DataFrame,
-        history: Option[DataFrame]): Long = {
-      if ((batchId + 1) % compactEvery == 0) {
-        val all = history.map(_.unionByName(contribution)).getOrElse(contribution)
-        // a generation is resolvable the moment Spark's job commit drops
-        // _SUCCESS — genIds() is the single source of truth, no pointer
-        // file (read(B) must resolve gen ids < B, which a newest-wins
-        // pointer cannot express)
-        all.distinct().write.mode("overwrite").parquet(s"$root/gen-$batchId")
-        val rewritten = spark.read.parquet(s"$root/gen-$batchId").count()
-        val stale = genIds().sorted.dropRight(2)
-        stale.foreach(g => fs.delete(p(s"gen-$g"), true))
-        // deltas at or below the PREVIOUS snapshot are covered by both
-        // retained generations; newer ones must survive until this
-        // batch commits (a replay of batch B re-reads them). ONE
-        // listStatus of delta/ (bounded at ~2·compactEvery entries by
-        // this very pruning), not an exists() probe per historic batch
-        // id — per-compaction metadata calls stay O(compactEvery).
-        val prevGen = genIds().filter(_ < batchId).sorted.lastOption.getOrElse(-1L)
-        if (fs.exists(p("delta")))
-          fs.listStatus(p("delta")).map(_.getPath)
-            .filter(d => numericSuffix(d.getName, "batch=").exists(_ <= prevGen))
-            .foreach(fs.delete(_, true))
-        rewritten
-      } else {
-        contribution.write.mode("overwrite").parquet(s"$root/delta/batch=$batchId")
-        -1L
-      }
-    }
-  }
+  case class CurDoc(doc_id: Long, lang: String, source: String, text: String,
+      tok: Int, text_hash: String, prefix_key: String)
 
   /** Fail-fast guard for restarting a curation stream over an existing
-    * output directory in the WRONG near-dup mode (the key history's
-    * schema is mode-specific: a (lang, prefix_key) history read into a
-    * (band, band_key) join would fail mid-batch with an opaque
-    * AnalysisException). The mode is persisted in the output root on
-    * first contact; a restart supplying a different mode fails at batch
-    * start with a message that names both modes.
+    * output directory in the WRONG near-dup mode: the keep-list's
+    * columns are mode-specific (prefix mode carries `prefix_key`) and its
+    * stage-3 decisions come from a different rule, so a restart in the
+    * other mode would silently mix two keep-lists under one `keep/`. The
+    * mode is persisted in the output root on first contact; a restart
+    * supplying a different mode fails at batch start with a message that
+    * names both modes.
     */
   private def requireNearDupMode(spark: SparkSession, outDir: String,
       nearDup: String): Unit = {
@@ -1627,9 +1460,9 @@ object StreamingJobs {
       }
     if (existing.nonEmpty)
       require(existing == nearDup,
-        s"output dir $outDir holds a nearDup=$existing key history; " +
-          s"restarting it with nearDup=$nearDup would join the wrong key " +
-          s"schema — resume with nearDup=$existing or use a fresh outDir")
+        s"output dir $outDir holds a nearDup=$existing keep-list; " +
+          s"restarting it with nearDup=$nearDup would mix two near-dup " +
+          s"rules — resume with nearDup=$existing or use a fresh outDir")
     else {
       // write-then-rename so a crash mid-write cannot leave an empty
       // marker that blocks every later restart; an empty marker (from a
@@ -1644,229 +1477,10 @@ object StreamingJobs {
     }
   }
 
-  /** Stages 3–5 of the curation decision chain (near-dup removal → hash
-    * split → shard packing) plus the per-batch bookkeeping (keep-list
-    * write, key history, pack offsets, metrics) — ONE definition shared
-    * by [[curationPipelineSink]] (directory-backed exact-dedup history)
-    * and [[curationPipelineSinkTws]] (state-store exact-dedup), so the
-    * two sinks' decisions cannot drift. `s2` carries the exact-dedup
-    * survivors (doc_id, lang, source, text, tok, text_hash, prefix_key).
-    * `writeHashHistory` runs right after the keep-list lands (the
-    * crash-replay write order) and returns the hash compaction's
-    * rows-rewritten (−1 for a delta batch, or when the hash state lives
-    * in the state store).
-    */
-  private def curationStage345(outDir: String, batchId: Long, s2: DataFrame,
-      nearDup: String, hashHistDirs: Int, writeHashHistory: () => Long): Unit = {
-    val spark = s2.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val keyHist = new HistorySet(spark, s"$outDir/keys")
-    // stage 3 (near-dup): keep-first decomposition over the stage's
-    // ENTRANT history (stage-2 survivors)
-    val (priorKeys, nKeyDirs) = keyHist.read(batchId)
-    // schema-level mode check, independent of the marker file: an outDir
-    // whose key history predates the marker (or lost it) still fails
-    // LOUDLY here instead of mid-join with an opaque AnalysisException
-    priorKeys.foreach { h =>
-      val expect =
-        if (nearDup == "prefix") Set("lang", "prefix_key") else Set("band", "band_key")
-      require(h.columns.toSet == expect,
-        s"key history under $outDir/keys has columns [${h.columns.mkString(", ")}] " +
-          s"— not the nearDup=$nearDup schema [${expect.mkString(", ")}]; " +
-          "resume with the mode that wrote it or use a fresh outDir")
-    }
-    var bandsRef: Option[DataFrame] = None
-    val (s3, keyContribution) = nearDup match {
-      case "prefix" =>
-        val wKey = Window.partitionBy("lang", "prefix_key").orderBy("doc_id")
-        val keyFirst = s2
-          .withColumn("rn", row_number().over(wKey))
-          .filter(col("rn") === 1).drop("rn")
-        val kept = priorKeys.fold(keyFirst)(h =>
-          keyFirst.join(h, Seq("lang", "prefix_key"), "left_anti"))
-        (kept, s2.select("lang", "prefix_key").distinct())
-      case "lsh" =>
-        val bands = graft.operators.DedupQueries
-          .bandKeysOf(s2.select("doc_id", "text")).persist()
-        bandsRef = Some(bands)
-        val wBand = Window.partitionBy("band", "band_key").orderBy("doc_id")
-        val localBad = bands
-          .withColumn("rn", row_number().over(wBand))
-          .filter(col("rn") > 1).select("doc_id")
-        val histBad = priorKeys.fold(spark.range(0).select(col("id").as("doc_id")))(
-          h => bands.join(h, Seq("band", "band_key"), "left_semi").select("doc_id"))
-        val kept = s2.join(localBad.union(histBad).distinct(),
-          Seq("doc_id"), "left_anti")
-        (kept, bands.select("band", "band_key").distinct())
-    }
-    curationStage45(outDir, batchId, s3, nearDup, hashHistDirs, nKeyDirs,
-      () => (writeHashHistory(),
-        keyHist.write(batchId, keyContribution, priorKeys)))
-    bandsRef.foreach(_.unpersist())
-  }
-
-  /** Stages 4–5 of the curation chain (hash split → shard packing) plus
-    * the per-batch bookkeeping (keep-list write, history writes via the
-    * caller's closure, pack offsets, metrics) — the tail shared by ALL
-    * THREE sinks ([[curationPipelineSink]], [[curationPipelineSinkTws]],
-    * [[curationPipelineSinkTwsAll]]); `s3` carries the near-dup
-    * survivors. `writeHistories` runs right after the keep-list lands
-    * (the crash-replay write order) and returns the (hash, key)
-    * compaction rows-rewritten (−1 per side when that history is a plain
-    * delta batch or lives in the state store).
-    */
-  private def curationStage45(outDir: String, batchId: Long, s3: DataFrame,
-      nearDup: String, hashHistDirs: Int, keyHistDirs: Int,
-      writeHistories: () => (Long, Long)): Unit = {
-    val spark = s3.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val fs = fsFor(spark, outDir)
-    // stage 4 (split) is a pure hash of doc_id — no state; stage 5
-    // (packing) resumes each (split, source) group's cumulative token
-    // count from the previous batch's snapshot
-    val prevOff = {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/offsets/gen-${batchId - 1}")
-      if (batchId > 0 && fs.exists(p)) spark.read.parquet(p.toString)
-      else spark.range(0).select(lit("").as("split"), lit("").as("source"),
-        lit(0L).as("off"))
-    }
-    val packW = Window.partitionBy("split", "source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val keepCols = Seq("doc_id", "lang", "source", "tok", "text_hash") ++
-      (if (nearDup == "prefix") Seq("prefix_key") else Nil) ++
-      Seq("split", "shard")
-    val packed = s3
-      .withColumn("bucket",
-        expr(graft.operators.SamplingQueries.bucketExpr("doc_id")))
-      .withColumn("split",
-        when(col("bucket") < 80, "train")
-          .when(col("bucket") < 90, "val")
-          .otherwise("test"))
-      .join(broadcast(prevOff), Seq("split", "source"), "left")
-      .na.fill(0L, Seq("off"))
-      .withColumn("cum_before",
-        sum(col("tok")).over(packW) - col("tok") + col("off"))
-      .withColumn("shard", expr("cum_before div 2048"))
-      .persist()
-    packed
-      .select(keepCols.head, keepCols.tail: _*)
-      .write.mode("overwrite").parquet(s"$outDir/keep/batch=$batchId")
-    // history + offsets snapshots for the NEXT batch (written last:
-    // a crash mid-batch replays from the checkpoint and overwrites)
-    val (hashRewritten, keyRewritten) = writeHistories()
-    val add = packed.groupBy("split", "source").agg(sum("tok").as("add"))
-    prevOff.join(add, Seq("split", "source"), "full_outer")
-      .select(col("split"), col("source"),
-        (coalesce(col("off"), lit(0L)) + coalesce(col("add"), lit(0L))).as("off"))
-      .write.mode("overwrite").parquet(s"$outDir/offsets/gen-$batchId")
-    if (batchId >= 2)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$outDir/offsets/gen-${batchId - 2}"), true)
-    // auditable boundedness, BOTH sides of the compaction trade: what
-    // this batch read (dir counts) and what its compactions rewrote
-    // (rows; −1 = no compaction this batch)
-    spark.range(1).select(
-      lit(batchId).as("batch_id"),
-      lit(hashHistDirs).as("hash_hist_dirs"),
-      lit(keyHistDirs).as("key_hist_dirs"),
-      lit(nearDup).as("near_dup_mode"),
-      lit(hashRewritten).as("hash_rows_rewritten"),
-      lit(keyRewritten).as("key_rows_rewritten"))
-      .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
-    packed.unpersist()
-  }
-
-  /** I12 at PIPELINE granularity, streaming: the whole curation decision
-    * chain — gate → exact dedup → near-dup removal → hash split → shard
-    * packing — as ONE streaming job over the raw document stream,
-    * replacing the reference's per-record Lambda chain. Stage
-    * definitions are SHARED with the batch pipeline
-    * ([[graft.operators.PipelineQueries.curationKeepList]] /
-    * [[graft.operators.PipelineQueries.curationKeepListLsh]]): the
-    * stream's keep-list provably equals the batch one row-for-row under
-    * doc_id-ordered replay (ScaleSmokeSpec), because each global
-    * keep-first-by-doc_id window decomposes exactly into a batch-local
-    * keep-first plus an anti-join against the history of every earlier
-    * batch's STAGE ENTRANTS, and the running pack offsets carry per
-    * (split, source) across batches.
-    *
-    * `nearDup` selects stage 3: `"prefix"` keeps first per
-    * (lang, first-3-tokens) — the cheap heuristic; `"lsh"` buckets docs
-    * with the served MinHash banding
-    * ([[graft.operators.DedupQueries.bandKeysOf]], 4 bands × 3 rows)
-    * and drops a doc iff any of its band buckets holds an earlier
-    * entrant — the same first-in-every-bucket rule as the batch twin.
-    * Both histories are the stage's ENTRANTS (stage-2 survivors): an
-    * entrant blocks later look-alikes even if it was itself dropped, by
-    * construction of the batch window rule — that is what makes the
-    * decomposition exact.
-    *
-    * Cross-batch state lives in the OUTPUT directory, not the state
-    * store, via [[HistorySet]] (generation-compacted, Hadoop-FS,
-    * bounded per-batch read volume) — per-batch dir-read counts are
-    * recorded under `metrics/batch=<id>` so the boundedness is
-    * auditable, not asserted. The offsets table is (split × source)
-    * rows, rewritten per batch with two generations retained (replay of
-    * batch B reads B−1's snapshot). All per-batch outputs are
-    * idempotent whole-dir overwrites — the scrubRoute/upsertSink
-    * replay contract. At RocksDB-state volumes the same stage chain
-    * could instead hold hash/bucket history in transformWithState; the
-    * directory form is chosen so the keep-list, its decisions, and the
-    * dedup state stay one `spark.read.parquet` away from audit.
-    */
-  def curationPipelineSink(docs: DataFrame, outDir: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      nearDup: String = "prefix") = {
-    require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        requireNearDupMode(spark, outDir, nearDup)
-        val hashHist = new HistorySet(spark, s"$outDir/hashes")
-        // stage 1 (gate) + the decision keys, same expressions as the
-        // batch chain
-        val gated = batch
-          .withColumn("tok", size(split(col("text"), " ")))
-          .filter(col("tok") >= 20)
-          .withColumn("text_hash", sha2(col("text").cast("binary"), 256))
-          .withColumn("prefix_key",
-            concat_ws(" ", slice(split(col("text"), " "), 1, 3)))
-          .persist()
-        // stage 2 (exact dedup): batch-local keep-first by doc_id, then
-        // drop anything whose hash appeared in an earlier batch — under
-        // doc_id-ordered replay that earlier doc IS the global first
-        val wHash = Window.partitionBy("text_hash").orderBy("doc_id")
-        val hashFirst = gated
-          .withColumn("rn", row_number().over(wHash))
-          .filter(col("rn") === 1).drop("rn")
-        val (priorHashes, nHashDirs) = hashHist.read(batchId)
-        val s2 = priorHashes.fold(hashFirst)(h =>
-          hashFirst.join(h, Seq("text_hash"), "left_anti")).persist()
-        // stages 3–5 + bookkeeping are the shared tail; the hash history
-        // write runs inside it, right after the keep-list lands
-        curationStage345(outDir, batchId, s2, nearDup, nHashDirs,
-          () => hashHist.write(batchId,
-            gated.select("text_hash").distinct(), priorHashes))
-        s2.unpersist(); gated.unpersist()
-        ()
-      }
-  }
-
-  // ---- I12 + H6: the curation pipeline with STATE-STORE exact dedup ----
-
-  case class CurDoc(doc_id: Long, lang: String, source: String, text: String,
-      tok: Int, text_hash: String, prefix_key: String)
-
-  /** Stage 1 (gate) + decision keys + the state-store exact-dedup stage,
-    * shared by [[curationPipelineSinkTws]] and
-    * [[curationPipelineSinkTwsAll]]: the gated stream keyed by text_hash
+  /** Stage 1 (gate) + decision keys + the state-store exact-dedup stage
+    * of [[curationPipelineSink]]: the gated stream keyed by text_hash
     * through [[HashDedupProcessor]] — its output is exactly the stage-2
-    * survivors. One definition so a gate change cannot silently diverge
-    * the TWS sinks from each other.
+    * survivors.
     */
   private def gatedHashDeduped(docs: DataFrame): org.apache.spark.sql.Dataset[CurDoc] = {
     val spark = docs.sparkSession
@@ -1891,13 +1505,8 @@ object StreamingJobs {
     * hash emits its min-doc_id row and pins the state; every later
     * arrival of the same hash emits nothing. Under doc_id-ordered
     * replay "first arrival, min within batch" IS the global
-    * keep-first-by-doc_id, the same decomposition argument as the
-    * directory-history sink — but the hash set lives in RocksDB behind
-    * the state-store checkpoint instead of parquet generations, so
-    * there is no periodic full-history rewrite: the LSM pays the
-    * compaction cost incrementally, which is the right trade once the
-    * accumulated hash history outgrows [[HistorySet]]'s cadence
-    * rewrites (months-lived streams).
+    * keep-first-by-doc_id. The hash set lives in RocksDB behind the
+    * state-store checkpoint.
     */
   class HashDedupProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[String, CurDoc, CurDoc] {
@@ -1913,41 +1522,6 @@ object StreamingJobs {
         val first = rows.minBy(_.doc_id)
         kept.update(first.doc_id)
         Iterator.single(first)
-      }
-  }
-
-  /** [[curationPipelineSink]] with the exact-dedup stage moved into the
-    * state store ([[HashDedupProcessor]] via transformWithState/RocksDB)
-    * — the documented endgame for streams whose hash history outgrows
-    * HistorySet's periodic rewrites. Stages 1 (gate) and 3–5 are the
-    * SAME definitions as the directory-history sink
-    * ([[curationStage345]]), so the two variants provably make identical
-    * decisions (ScaleSmokeSpec runs the same row-for-row batch-equality
-    * proof against both, plus a checkpoint-resume restart case for the
-    * state's durability). The near-dup key history remains a
-    * [[HistorySet]]: its entrant volume is stage-2-survivor-sized
-    * (strictly smaller than the hash side) and keeping it in the output
-    * dir preserves one-`spark.read`-away auditability of the near-dup
-    * state.
-    */
-  def curationPipelineSinkTws(docs: DataFrame, outDir: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      nearDup: String = "prefix") = {
-    require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
-    requireRocksDb(docs.sparkSession)
-    gatedHashDeduped(docs).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        requireNearDupMode(batch.sparkSession, outDir, nearDup)
-        val b = batch.persist()
-        // hash history lives in the state store: 0 dirs read, no
-        // compaction rewrites to report (−1)
-        curationStage345(outDir, batchId, b, nearDup,
-          hashHistDirs = 0, () => -1L)
-        b.unpersist()
-        ()
       }
   }
 
@@ -1990,41 +1564,53 @@ object StreamingJobs {
         rs.iterator.map(r => BandVerdict(r.doc.doc_id == minId, r.doc))
       }
   }
-
-  /** The ALL-state-store curation sink (r14 verdict #3): BOTH keep-first
-    * histories — the exact-dedup hash set AND the stage-3 near-dup keys
-    * — live in transformWithState/RocksDB, so the sink maintains no
-    * history directory at all (offsets/metrics remain tiny per-batch
-    * snapshots). The months-lived-stream argument that moved the hash
-    * side into the state store applies to the key side at exactly the
-    * same stream age; [[curationPipelineSinkTws]] keeps the directory
-    * key history for auditability, this variant completes the endgame.
+  /** I12 at PIPELINE granularity, streaming: the whole curation decision
+    * chain — gate → exact dedup → near-dup removal → hash split → shard
+    * packing — as ONE streaming job over the raw document stream,
+    * replacing the reference's per-record Lambda chain. The stream's
+    * keep-list provably equals the batch one
+    * ([[graft.operators.PipelineQueries.curationKeepList]] /
+    * [[graft.operators.PipelineQueries.curationKeepListLsh]])
+    * row-for-row under doc_id-ordered replay (ScaleSmokeSpec, sf0.01
+    * and 5M docs, with checkpoint-resume restarts), because each global
+    * keep-first-by-doc_id window decomposes exactly into "first arrival,
+    * min doc_id within the batch" per key, and the running pack offsets
+    * carry per (split, source) across batches.
     *
-    * Stage 3 decomposes per mode into a second keyed first-entrant-wins
-    * pass: `prefix` re-keys the hash survivors by (lang, prefix_key)
-    * through the SAME [[HashDedupProcessor]] rule; `lsh` explodes each
-    * survivor into its 4 band-bucket rows
-    * ([[graft.operators.DedupQueries.bandKeysLocal]], the row-local twin
-    * of the served banding) and ANDs the per-bucket
-    * [[BucketDedupProcessor]] verdicts batch-locally. Stages 1, 4–5 and
-    * all bookkeeping are the shared definitions ([[curationStage45]]),
-    * so all three sinks provably make identical decisions (ScaleSmokeSpec
-    * runs the same row-for-row equality + restart proofs against this
-    * variant in both modes).
+    * Both keep-first histories live in transformWithState/RocksDB, so
+    * the sink maintains no history directory: stage 2 keys the gated
+    * docs by text_hash through [[HashDedupProcessor]]; stage 3 is a
+    * second keyed first-entrant-wins pass chosen by `nearDup`.
+    * `"prefix"` re-keys the hash survivors by (lang, first-3-tokens)
+    * through the SAME [[HashDedupProcessor]] rule — the cheap
+    * heuristic. `"lsh"` explodes each survivor into its 4 band-bucket
+    * rows ([[graft.operators.DedupQueries.bandKeysLocal]], the
+    * row-local twin of the served 4 bands × 3 rows MinHash banding) and
+    * ANDs the per-bucket [[BucketDedupProcessor]] verdicts batch-locally
+    * — a doc is dropped iff any of its buckets holds an earlier entrant,
+    * the same first-in-every-bucket rule as the batch twin. Both
+    * histories are the stage's ENTRANTS (stage-2 survivors): an entrant
+    * blocks later look-alikes even if it was itself dropped, by
+    * construction of the batch window rule.
+    *
+    * The offsets table is (split × source) rows, rewritten per batch
+    * with two generations retained (replay of batch B reads B−1's
+    * snapshot); `metrics/batch=<id>` records the batch id and mode. All
+    * per-batch outputs are idempotent whole-dir overwrites — the
+    * scrubRoute/upsertSink replay contract.
     */
-  def curationPipelineSinkTwsAll(docs: DataFrame, outDir: String, checkpoint: String,
+  def curationPipelineSink(docs: DataFrame, outDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       nearDup: String = "prefix") = {
     require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    requireRocksDb(spark)
+    import docs.sparkSession.implicits._
+    requireRocksDb(docs.sparkSession)
     val s2 = gatedHashDeduped(docs)
     val s3 = nearDup match {
       case "prefix" =>
         // the same first-entrant-wins rule, re-keyed by the stage-3 key:
         // keep-first per (lang, prefix_key) over the stage-2 survivors
-        s2.groupByKey(d => d.lang + " " + d.prefix_key)
+        s2.groupByKey(d => d.lang + "\u0000" + d.prefix_key)
           .transformWithState(new HashDedupProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
@@ -2043,7 +1629,10 @@ object StreamingJobs {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        requireNearDupMode(batch.sparkSession, outDir, nearDup)
+        val spark = batch.sparkSession
+        import org.apache.spark.sql.expressions.Window
+        requireNearDupMode(spark, outDir, nearDup)
+        val fs = fsFor(spark, outDir)
         val b = batch.persist()
         val kept = nearDup match {
           case "prefix" => b
@@ -2055,15 +1644,73 @@ object StreamingJobs {
             b.select(col("doc.*")).distinct()
               .join(bad, Seq("doc_id"), "left_anti")
         }
-        // both histories live in the state store: 0 dirs read, no
-        // compaction rewrites to report (−1, −1)
-        curationStage45(outDir, batchId, kept, nearDup,
-          hashHistDirs = 0, keyHistDirs = 0, () => (-1L, -1L))
+        // stage 4 (split) is a pure hash of doc_id — no state; stage 5
+        // (packing) resumes each (split, source) group's cumulative token
+        // count from the previous batch's snapshot
+        val prevOff = {
+          val p = new org.apache.hadoop.fs.Path(s"$outDir/offsets/gen-${batchId - 1}")
+          if (batchId > 0 && fs.exists(p)) spark.read.parquet(p.toString)
+          else spark.range(0).select(lit("").as("split"), lit("").as("source"),
+            lit(0L).as("off"))
+        }
+        val packW = Window.partitionBy("split", "source").orderBy("doc_id")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val keepCols = Seq("doc_id", "lang", "source", "tok", "text_hash") ++
+          (if (nearDup == "prefix") Seq("prefix_key") else Nil) ++
+          Seq("split", "shard")
+        val packed = kept
+          .withColumn("bucket",
+            expr(graft.operators.SamplingQueries.bucketExpr("doc_id")))
+          .withColumn("split",
+            when(col("bucket") < 80, "train")
+              .when(col("bucket") < 90, "val")
+              .otherwise("test"))
+          .join(broadcast(prevOff), Seq("split", "source"), "left")
+          .na.fill(0L, Seq("off"))
+          .withColumn("cum_before",
+            sum(col("tok")).over(packW) - col("tok") + col("off"))
+          .withColumn("shard", expr("cum_before div 2048"))
+          .persist()
+        packed
+          .select(keepCols.head, keepCols.tail: _*)
+          .write.mode("overwrite").parquet(s"$outDir/keep/batch=$batchId")
+        // offsets snapshot for the NEXT batch (written last: a crash
+        // mid-batch replays from the checkpoint and overwrites)
+        val add = packed.groupBy("split", "source").agg(sum("tok").as("add"))
+        prevOff.join(add, Seq("split", "source"), "full_outer")
+          .select(col("split"), col("source"),
+            (coalesce(col("off"), lit(0L)) + coalesce(col("add"), lit(0L))).as("off"))
+          .write.mode("overwrite").parquet(s"$outDir/offsets/gen-$batchId")
+        if (batchId >= 2)
+          fs.delete(new org.apache.hadoop.fs.Path(
+            s"$outDir/offsets/gen-${batchId - 2}"), true)
+        spark.range(1).select(
+          lit(batchId).as("batch_id"),
+          lit(nearDup).as("near_dup_mode"))
+          .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
+        packed.unpersist()
         b.unpersist()
         ()
       }
   }
-
+  /** A8/I8/H8: the streaming quality-gate scrub — "scrub before anything
+    * else sees the text", as a routing map over the raw document stream.
+    * Each micro-batch goes through the SAME gate expressions as the
+    * batch queries ([[graft.operators.CurationQueries]].gopherSignals /
+    * piiScrub are shared definitions, so the stream's keep/reject
+    * verdicts cannot drift from the batch report): accepted docs are
+    * archived with PII already redacted; rejects route to the
+    * dead-letter path carrying every failed-rule flag plus a compact
+    * reason list for triage. Both destinations are written inside ONE
+    * foreachBatch from one persisted scan of the batch (the fan-out
+    * shape), and each batch lands in its own `batch=<id>` directory with
+    * overwrite semantics — a micro-batch replayed after a crash between
+    * write and checkpoint commit overwrites its own partial output
+    * instead of duplicating it, the same idempotence contract as
+    * [[upsertSink]] without the merge machinery. Stateless row-local
+    * gates ⇒ no state store, no watermark; throughput scales with
+    * partition count.
+    */
   def scrubRoute(docs: DataFrame, acceptDir: String, dlqDir: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()) = {
     docs.writeStream

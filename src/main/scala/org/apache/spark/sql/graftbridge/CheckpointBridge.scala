@@ -20,12 +20,6 @@ import org.apache.spark.sql.graftbridge.{ColumnBridge => CB}
   */
 object CheckpointBridge {
 
-  /** Eagerly localCheckpoints `df.repartition(keys)` and returns a frame
-    * whose leaf declares HashPartitioning(keys, n): downstream joins and
-    * aggregations clustered by `keys` (or a superset) skip their
-    * exchange. The claim is true by construction — the repartition runs
-    * INSIDE this call, immediately before the checkpoint.
-    */
   /** Plan-level lineage truncation with LAZY, deadlock-free
     * materialization (r18): returns a LogicalRDD leaf over the frame's
     * RDD, `persist`ed so every consumer computes each partition once —
@@ -57,6 +51,12 @@ object CheckpointBridge {
       LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
   }
 
+  /** Eagerly localCheckpoints `df.repartition(keys)` and returns a frame
+    * whose leaf declares HashPartitioning(keys, n): downstream joins and
+    * aggregations clustered by `keys` (or a superset) skip their
+    * exchange. The claim is true by construction — the repartition runs
+    * INSIDE this call, immediately before the checkpoint.
+    */
   def localCheckpointPartitionedBy(df: org.apache.spark.sql.DataFrame,
       keys: Seq[String]): org.apache.spark.sql.DataFrame = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]

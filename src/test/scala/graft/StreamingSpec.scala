@@ -117,13 +117,13 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(out.exists(s => s.user_id == 2 && s.n_events == 1 && s.sum_value == 5.0))
   }
 
-  test("H6: timer-based transformWithState sessionizer equals the legacy sessionizer") {
+  test("H6: timer-based sessionizer emits the expected sessions across batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    // same batched replay through both implementations: gap-close inside a
-    // batch (user 1), cross-batch session extension (user 2), singleton
-    // (user 3), then two flusher batches so every event-time timeout /
-    // timer has fired before comparing
+    // gap close inside a batch's rows (user 1: 10 -> 50 is a 40-min gap,
+    // seen in batch 2), a session extended across batches (user 2), a
+    // singleton (user 3), then two flusher batches that push the
+    // 10-minute watermark past every open session's timer
     val batches = Seq(
       Seq(SessionInput(1, at(0), 1.0), SessionInput(1, at(10), 2.0),
         SessionInput(2, at(5), 5.0)),
@@ -131,24 +131,20 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       Seq(SessionInput(3, at(100), 7.0)),
       Seq(SessionInput(99, at(600), 0.0)),
       Seq(SessionInput(99, at(1200), 0.0)))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[SessionInput] => org.apache.spark.sql.Dataset[SessionOut]): Set[SessionOut] = {
-      val ms = MemoryStream[SessionInput]
-      val q = f(ms.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(name).as[SessionOut].collect().filter(_.user_id != 99).toSet
-    }
-    val legacy = run("sess_legacy",
-      ds => StreamingJobs.sessionize(ds.withWatermark("ts", "10 minutes"), 30))
-    val timers = run("sess_timers",
-      ds => StreamingJobs.sessionizeTimers(ds, 30))
-    assert(legacy.nonEmpty, "flushers must have closed some sessions")
-    assert(legacy == timers, s"legacy=$legacy timers=$timers")
-    // the split sessions for user 1 and the merged one for user 2 exist
-    assert(timers.count(_.user_id == 1) == 2)
-    assert(timers.exists(s => s.user_id == 2 && s.n_events == 2 && s.sum_value == 6.5))
+    val ms = MemoryStream[SessionInput]
+    val q = StreamingJobs.sessionize(ms.toDS().withWatermark("ts", "10 minutes"), 30)
+      .writeStream.format("memory").queryName("sess_timers")
+      .outputMode("append").start()
+    try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    val got = spark.table("sess_timers").as[SessionOut].collect()
+      .filter(_.user_id != 99).sortBy(s => (s.user_id, -s.n_events)).toSeq
+    // each session exactly once: (user, n_events, sum_value, duration_sec)
+    assert(got == Seq(
+      SessionOut(1, 2, 3.0, 600), // 0 + 10, closed by the gap to 50
+      SessionOut(1, 1, 3.0, 0),   // 50 alone, closed by its timer
+      SessionOut(2, 2, 6.5, 900), // 5 (batch 1) + 20 (batch 2)
+      SessionOut(3, 1, 7.0, 0)))  // singleton
   }
 
   test("H4/H6: sessionizer drops fully-late events and the query survives") {
@@ -162,8 +158,9 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     q.processAllAvailable()
     // event far behind the watermark: the pre-stateful watermark filter
     // drops it (the reference, by contrast, silently mis-bucketed late
-    // data); the query must keep running either way — the inline-close
-    // guard in sessionize covers the boundary case the filter lets through
+    // data); the query must keep running either way — a timer registered
+    // at or below the watermark just fires on the next batch, which covers
+    // the boundary case the filter lets through
     ms.addData(SessionInput(8, at(1), 2.0))
     q.processAllAvailable()
     ms.addData(SessionInput(7, at(2000), 3.0))
